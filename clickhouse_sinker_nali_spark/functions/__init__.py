@@ -53,7 +53,7 @@ def shard_stripe(col: Column | str, stripe: int, shards: int) -> Column:
 
     Reference ``task/sharding.go:62-76`` (policy ``stripe``): integral key
     divided by a stripe width, modulo shard count.  Pure column arithmetic —
-    no shuffle; used with ``df.repartition(shards, expr)`` for routing.
+    no shuffle; the sinks route each row to the shard it evaluates to.
     """
     c = F.col(col) if isinstance(col, str) else col
     return (c.cast("bigint") / F.lit(int(stripe))).cast("bigint") % F.lit(int(shards))

@@ -4,8 +4,9 @@ Re-expresses the reference's output layer (SURVEY.md §2.8):
 
 - K1 batched INSERT    → JDBC ``df.write.jdbc`` with ``batchsize`` (or any
                          per-partition writer)
-- K2 shard routing     → ``repartition(n, shard_expr)`` so each write
-                         partition maps 1:1 to one shard's endpoint
+- K2 shard routing     → one ``filter(shard_expr == s)`` per shard over
+                         the batch ``start_pipeline`` materialized once,
+                         written as one INSERT (one partition) per shard
 - K3 replica failover  → per-shard replica list, rotate on failure with
                          bounded retries + backoff (reference
                          pool/conn.go:75-126, output/clickhouse.go:162-194)
@@ -166,10 +167,16 @@ class JdbcClickHouseSink:
     ``batchsize`` tuned to the reference's insert-block sizing
     (DSN block_size = 2 × MaxBufferSize, reference pool/conn.go:134-135).
 
-    At scale: ``repartition(shards, expr)`` is the only shuffle; writes to
-    distinct shards proceed in parallel (independent jobs), and replays of
-    a failed epoch re-route rows identically (deterministic expr), so a
-    ReplacingMergeTree target yields exactly-once.
+    Each shard gets one INSERT per batch: its rows are filtered out of the
+    batch and coalesced to one partition, so the write is one single-task
+    Spark job and one JDBC transaction (the reference flushes a batch as
+    one INSERT per shard, model/message.go:70-92).  Shards are written one
+    after another.  Every shard filter reads the whole batch, so the batch
+    must already be materialized — ``start_pipeline`` does this once
+    before calling the sink; an unmaterialized frame is re-evaluated once
+    per shard, in a single task.  Replays of a failed epoch re-route rows
+    identically (deterministic expr), so a ReplacingMergeTree target
+    yields exactly-once.
     """
 
     urls: list[list[str]]
@@ -198,16 +205,8 @@ class JdbcClickHouseSink:
     def write(self, df: DataFrame, epoch_id: int) -> None:
         shards = len(self.urls)
         if self.sharding_policy:
-            routed = df.repartition(
-                shards, shard_expr(self.sharding_policy, self.sharding_key, shards)
-            )
-            parts = [
-                routed.filter(
-                    shard_expr(self.sharding_policy, self.sharding_key, shards)
-                    == F.lit(s)
-                )
-                for s in range(shards)
-            ]
+            expr = shard_expr(self.sharding_policy, self.sharding_key, shards)
+            parts = [df.filter(expr == F.lit(s)) for s in range(shards)]
         else:
             # reference default: whole batch to one shard, stable by epoch
             parts = [None] * shards
@@ -224,8 +223,10 @@ class JdbcClickHouseSink:
                     "clickhouse_reconnect_total",
                     {"task": self.task_name or self.table},
                 )
+            # one partition = one JDBC transaction: one INSERT per shard
+            one_insert = part.coalesce(1)
             with_retries(
-                lambda r: part.write.mode("append").jdbc(
+                lambda r: one_insert.write.mode("append").jdbc(
                     replicas[r], self.table, properties=self._props()
                 ),
                 replicas=len(replicas),
@@ -288,6 +289,11 @@ def prometheus_fanout_sink(
     restart safety comes from the checkpoint replaying the batch into the
     same append + anti-join (the second write of a replayed series loses
     the anti-join and writes nothing).
+
+    The writer persists the batch itself, because it reads it twice (the
+    metric append and the series anti-join) and is handed to
+    ``foreachBatch`` directly: it never goes through ``start_pipeline``,
+    whose ``write_batch`` materializes the batch for the sinks it calls.
     """
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:

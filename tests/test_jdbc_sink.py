@@ -18,6 +18,7 @@ columns here are uppercase throughout so both access paths agree.
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -64,6 +65,11 @@ def _query_rows(conn, sql: str) -> list[tuple]:
         out.append(tuple(rs.getObject(i + 1) for i in range(n)))
     st.close()
     return out
+
+
+def _persisted(spark) -> set[int]:
+    """Ids of the RDDs the session currently keeps cached."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
 def test_jdbc_sink_real_write_roundtrip(spark, tmp_path):
@@ -292,12 +298,15 @@ def test_mid_batch_sink_crash_recovers_exactly_once(spark, tmp_path):
         )
 
     # run 1: shard 0 commits, shard 1 crashes the epoch mid-batch
+    cached_before = _persisted(spark)
     q = start_pipeline(
         spark, cfg, build_file_source(spark, src), make_sink(), ckpt,
         available_now=True,
     )
     with pytest.raises(Exception):
         q.awaitTermination(300)
+    # the failed batch released its materialized copy on the way out
+    assert _persisted(spark) == cached_before
     partial = spark.read.jdbc(url_a, "EVENTS_XO", properties=DERBY_PROPS)
     n_partial = partial.count()
     assert n_partial > 0  # the crash really was mid-batch: shard 0 landed
@@ -332,3 +341,210 @@ def test_mid_batch_sink_crash_recovers_exactly_once(spark, tmp_path):
     # even RAW (per-epoch transactionality, no FINAL needed)
     assert b.count() == b.select("ID").distinct().count()
     assert b.count() + n_partial == n
+
+
+# -- one evaluation per micro-batch ---------------------------------------
+
+KAFKA_PARTS = 4
+N_MESSAGES = 3200
+N_FIRST = 800  # the first batch; the rest lands after it as a backlog
+MALFORMED_EVERY = 97  # message j is malformed when j % 97 == 13: about 1%
+FLOW_DIMS = [
+    {"name": "ID", "type": "Int64", "sourcename": "id"},
+    {"name": "NAME", "type": "String", "sourcename": "name"},
+    {"name": "__kafka_partition", "type": "Int32"},
+    {"name": "__kafka_offset", "type": "Int64"},
+]
+# __kafka* start with "_", which only a quoted identifier allows in Derby
+FLOW_DDL = (
+    'CREATE TABLE FLOWS (ID BIGINT, NAME VARCHAR(16), '
+    '"__kafka_partition" INT, "__kafka_offset" BIGINT)'
+)
+
+
+def _malformed(j: int) -> bool:
+    return j % MALFORMED_EVERY == 13
+
+
+def _append_messages(topic_dir: str, lo: int, hi: int) -> None:
+    """Message j goes to partition j % KAFKA_PARTS at offset j // KAFKA_PARTS."""
+    chunks: list[list[str]] = [[] for _ in range(KAFKA_PARTS)]
+    for j in range(lo, hi):
+        if _malformed(j):
+            value = "not json" if j % 2 else '{"id": 1, "name": '
+        else:
+            value = json.dumps({"id": j, "name": f"n{j % 53}"})
+        chunks[j % KAFKA_PARTS].append(json.dumps({"value": value}) + "\n")
+    for p in range(KAFKA_PARTS):
+        with open(os.path.join(topic_dir, f"partition-{p}.jsonl"), "a") as f:
+            f.writelines(chunks[p])
+
+
+class _BatchProbe:
+    """Wraps a sink and records, per batch: the ids of the Spark jobs the
+    sink ran, the job counter when the sink returned, and the RDDs cached
+    while it ran."""
+
+    def __init__(self, inner, spark) -> None:
+        self.inner = inner
+        self.spark = spark
+        self.sched = spark._jsc.sc().dagScheduler()
+        self.sink_jobs: dict[int, range] = {}
+        self.jobs_at_end: dict[int, int] = {}
+        self.cached: dict[int, set[int]] = {}
+
+    def write(self, df, epoch_id: int) -> None:
+        self.cached[epoch_id] = _persisted(self.spark)
+        j0 = self.sched.numTotalJobs()
+        self.inner.write(df, epoch_id)
+        j1 = self.sched.numTotalJobs()
+        self.sink_jobs[epoch_id] = range(j0, j1)
+        self.jobs_at_end[epoch_id] = j1
+
+
+def _stream_into_derby(spark, tmp_path, shards: int, policy: str):
+    """start_pipeline over a 4-partition kafkasim topic into one Derby
+    database per shard: a first batch of N_FIRST messages, then the rest
+    as a backlog drained in capped batches.  Returns the executed
+    batches' progress, the probe, the job counter before the query
+    started, the RDDs cached before it, and the rows each shard holds."""
+    from clickhouse_sinker_nali_spark.sources.datasources import register_all
+    from clickhouse_sinker_nali_spark.streaming.pipeline import (
+        TaskConfig,
+        build_kafka_source,
+        start_pipeline,
+    )
+
+    root = str(tmp_path / "topics")
+    topic_dir = os.path.join(root, "flows")
+    os.makedirs(topic_dir)
+    _append_messages(topic_dir, 0, N_FIRST)
+    urls = [_derby_url(tmp_path, f"flows{s}") for s in range(shards)]
+    for url in urls:
+        conn = _connect(spark, url)
+        _exec(conn, FLOW_DDL)
+        conn.close()
+    register_all(spark)
+    cfg = TaskConfig(
+        name="once_task", topic="flows", table="FLOWS", dims=FLOW_DIMS,
+        flush_interval_s=1, buffer_size=512,
+        kafka_options={"path": root, "parallel": "true"},
+    )
+    probe = _BatchProbe(
+        JdbcClickHouseSink(
+            urls=[[u] for u in urls], table="FLOWS",
+            sharding_policy=policy, sharding_key="NAME" if policy else "",
+            properties=DERBY_PROPS,
+        ),
+        spark,
+    )
+    cached_before = _persisted(spark)
+    jobs_before = probe.sched.numTotalJobs()
+    q = start_pipeline(
+        spark, cfg, build_kafka_source(spark, cfg, "none:9092", fmt="kafkasim"),
+        probe, str(tmp_path / "ckpt"),
+    )
+    try:
+        q.processAllAvailable()
+        _append_messages(topic_dir, N_FIRST, N_MESSAGES)
+        q.processAllAvailable()
+        progress = {}
+        for p in q.recentProgress:
+            d = json.loads(p.json)
+            if "addBatch" in d.get("durationMs", {}):
+                progress[d["batchId"]] = d
+    finally:
+        q.stop()
+    rows = [
+        spark.read.jdbc(u, "FLOWS", properties=DERBY_PROPS).collect() for u in urls
+    ]
+    batches = [progress[b] for b in sorted(progress)]
+    return batches, probe, jobs_before, cached_before, rows
+
+
+def _batch_messages(batch: dict) -> list[int]:
+    """Global message numbers j of one batch, from its source offsets."""
+    src = batch["sources"][0]
+    start = {int(k): int(v) for k, v in (src["startOffset"] or {}).items()}
+    end = {int(k): int(v) for k, v in (src["endOffset"] or {}).items()}
+    return [
+        o * KAFKA_PARTS + p
+        for p in range(KAFKA_PARTS)
+        for o in range(start.get(p, 0), end.get(p, 0))
+    ]
+
+
+def _kafka_key(r) -> tuple[int, int]:
+    return int(r["__kafka_partition"]), int(r["__kafka_offset"])
+
+
+@pytest.mark.parametrize("shards", [2, 4])
+def test_sharded_batch_evaluated_once(spark, tmp_path, shards):
+    """Each micro-batch is evaluated once and each shard gets one INSERT:
+    the observed counters and numInputRows count every message once, a
+    batch runs at most one job per shard plus the materialization, each
+    shard's write is a single task, no batch's cache outlives it, and
+    rows land exactly once by (partition, offset) on their hash shard."""
+    from pyspark.sql import functions as F
+
+    from clickhouse_sinker_nali_spark.streaming.sinks import shard_expr
+
+    batches, probe, jobs_before, cached_before, rows = _stream_into_derby(
+        spark, tmp_path, shards, "hash"
+    )
+    assert len(batches) >= 3  # the first batch plus a capped backlog
+    assert sum(b["numInputRows"] for b in batches) == N_MESSAGES
+
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = spark.sparkContext.statusTracker()
+    prev_end = jobs_before
+    for b in batches:
+        epoch = b["batchId"]
+        js = _batch_messages(b)
+        assert b["numInputRows"] == len(js)
+        observed = b["observedMetrics"]["sinker_metrics"]
+        assert int(observed["parse_errors_total"] or 0) == sum(map(_malformed, js))
+        assert int(observed["rows_total"]) == len(js)
+        # one materialization job plus one write job per shard
+        assert probe.jobs_at_end[epoch] - prev_end <= shards + 1
+        prev_end = probe.jobs_at_end[epoch]
+        assert len(probe.sink_jobs[epoch]) == shards
+        for job_id in probe.sink_jobs[epoch]:
+            info = tracker.getJobInfo(job_id)
+            assert sum(tracker.getStageInfo(s).numTasks for s in info.stageIds) == 1
+        # only this batch's own cache is alive while the sink runs
+        assert len(probe.cached[epoch] - cached_before) <= 1
+    assert _persisted(spark) == cached_before
+
+    keys = [_kafka_key(r) for shard_rows in rows for r in shard_rows]
+    valid = {(j % KAFKA_PARTS, j // KAFKA_PARTS) for j in range(N_MESSAGES)
+             if not _malformed(j)}
+    assert len(keys) == len(valid)
+    assert set(keys) == valid
+    routed = spark.createDataFrame(
+        [(s, r["NAME"]) for s, shard_rows in enumerate(rows) for r in shard_rows],
+        "SHARD INT, NAME STRING",
+    )
+    assert routed.filter(shard_expr("hash", "NAME", shards) != F.col("SHARD")).count() == 0
+
+
+def test_unsharded_route_whole_batch_to_epoch_shard(spark, tmp_path):
+    """Without a sharding policy every batch goes whole to shard
+    ``epoch_id % shards`` (the reference's default routing), exactly once."""
+    shards = 2
+    batches, probe, _, cached_before, rows = _stream_into_derby(
+        spark, tmp_path, shards, ""
+    )
+    assert len(batches) >= 3
+    held = [{_kafka_key(r) for r in shard_rows} for shard_rows in rows]
+    assert sum(len(r) for r in rows) == sum(len(h) for h in held)  # no dups
+    for b in batches:
+        want = {(j % KAFKA_PARTS, j // KAFKA_PARTS) for j in _batch_messages(b)
+                if not _malformed(j)}
+        assert want <= held[b["batchId"] % shards]
+        assert not want & held[(b["batchId"] + 1) % shards]
+        assert len(probe.sink_jobs[b["batchId"]]) == 1
+    assert sum(len(h) for h in held) == N_MESSAGES - sum(
+        map(_malformed, range(N_MESSAGES))
+    )
+    assert _persisted(spark) == cached_before
