@@ -14,8 +14,9 @@ instead (reference docs/dev/introduction.md:40-56, parser/fastjson.go:278-300):
 - array targets: null array -> [], null elements -> element default
 
 All of this is expressed as Catalyst column expressions (whole-stage
-codegen'd, no Python in the hot path). The byte-faithful JSON-getter
-variant lives in parsers.py (``parse_json(..., faithful=True)``).
+codegen'd, no Python in the hot path). ``coerce_variant_expr`` below is
+the token-type-faithful variant ``parse_json`` uses for flat fields; the
+bug-level-faithful Python getters live in faithful.py.
 """
 
 from __future__ import annotations

@@ -38,11 +38,6 @@ def portable_hash64_sql(expr: str) -> str:
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
 
 
-def portable_hash64_spark_sql(expr: str) -> str:
-    """Spark-SQL rendering of :func:`portable_hash64` over ``expr``."""
-    return f"cast(conv(substr(md5({expr}), 1, 15), 16, 10) as bigint)"
-
-
 # --------------------------------------------------------------------------
 # sharding expressions (reference task/sharding.go:51-101)
 # --------------------------------------------------------------------------
@@ -105,18 +100,6 @@ def norm(a: Column | str) -> Column:
 def cosine(a: Column | str, b: Column | str) -> Column:
     """Cosine similarity of two array<numeric> columns."""
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def cosine_sql(a: str, b: str) -> str:
-    """DuckDB SQL for cosine similarity with the same fold order.
-
-    ``list_dot_product``/``list_cosine_similarity`` fold in index order, same
-    as the Spark ``aggregate`` fold above, so doubles match bit-for-bit.
-    """
-    return (
-        f"(list_dot_product({a}, {b}) / "
-        f"(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))))"
-    )
 
 
 # --------------------------------------------------------------------------

@@ -268,33 +268,9 @@ def _kafka_partitions(topic_dir: str) -> list[int]:
     )
 
 
-def _kafka_end_offsets(topic_dir: str) -> dict[str, int]:
-    out = {}
-    for p in _kafka_partitions(topic_dir):
-        with open(_os.path.join(topic_dir, f"partition-{p}.jsonl")) as f:
-            out[str(p)] = sum(1 for _ in f)
-    return out
-
-
-def _kafka_initial_offsets(topic_dir: str, topic: str, starting) -> dict:
-    """Resolve startingOffsets (earliest / latest / per-partition JSON)
-    to a per-partition offset dict — shared by both readers."""
-    if starting == "latest":
-        return _kafka_end_offsets(topic_dir)
-    if isinstance(starting, str) and starting.strip().startswith("{"):
-        spec = _json.loads(starting)
-        per_part = spec.get(topic, {})
-        return {
-            str(p): int(per_part.get(str(p), 0))
-            for p in _kafka_partitions(topic_dir)
-        }
-    return {str(p): 0 for p in _kafka_partitions(topic_dir)}
-
-
 def _kafka_apportion(start: dict, end: dict, cap: int | None) -> dict:
     """Cap total consumed offsets at ``cap`` (maxOffsetsPerTrigger),
-    split proportionally to per-partition lag (Spark Kafka rate-limit) —
-    shared by both readers."""
+    split proportionally to per-partition lag (Spark Kafka rate-limit)."""
     if cap is None:
         return end
     lags = {p: max(0, end.get(p, 0) - start.get(p, 0)) for p in end}
@@ -326,14 +302,14 @@ def _kafka_read_slice(
     base_line: int = 0,
     base_byte: int = 0,
 ):
-    """Decode rows [lo, hi) of one partition log — shared by the
-    driver-side simple reader and the executor-side parallel reader.
+    """Decode rows [lo, hi) of one partition log — the single kafkasim
+    decode path, run by each executor read task.
 
     ``(base_line, base_byte)`` is a seek anchor at or below ``lo`` (the
-    parallel reader's planner records byte positions at trigger
-    boundaries): the scan seeks there and skips only ``lo - base_line``
-    lines instead of re-reading the consumed prefix — per-trigger read
-    cost then tracks the batch, not the log's lifetime size."""
+    reader's planner records byte positions at trigger boundaries): the
+    scan seeks there and skips only ``lo - base_line`` lines instead of
+    re-reading the consumed prefix — per-trigger read cost then tracks
+    the batch, not the log's lifetime size."""
     from datetime import datetime, timedelta
 
     rows = []
@@ -352,11 +328,11 @@ def _kafka_read_slice(
             key = d.get("key")
             ts = d.get("ts")
             # ts default must be DETERMINISTIC in (partition, offset):
-            # Spark replays a committed offset range through
-            # readBetweenOffsets after failure recovery, and a
-            # wall-clock stamp would make the replayed batch differ
-            # from the original (breaking exactly-once for the
-            # timestamp column and anything windowed on it)
+            # Spark replays a planned offset range through partitions()
+            # after failure recovery, and a wall-clock stamp would make
+            # the replayed batch differ from the original (breaking
+            # exactly-once for the timestamp column and anything
+            # windowed on it)
             ts_val = (
                 datetime.fromisoformat(ts).replace(tzinfo=None)
                 if ts
@@ -374,86 +350,6 @@ def _kafka_read_slice(
                 )
             )
     return rows
-
-
-class KafkaSimStreamReader(SimpleDataSourceStreamReader):
-    """A broker-free source with Kafka's EXACT contract, so the full
-    ``build_kafka_source`` option surface is exercisable end-to-end in
-    this container (no broker exists here; reference input/kafka_sarama.go
-    consumes the real thing):
-
-    - schema = the 7 columns Spark's Kafka source emits (key/value as
-      BINARY, timestampType 0 = CreateTime);
-    - a "topic" is a directory of ``partition-N.jsonl`` files, offset =
-      line number within the partition file (dense, per-partition
-      monotonic — Kafka's replayability contract);
-    - ``subscribe`` picks the topic subdirectory;
-    - ``startingOffsets``: ``earliest`` | ``latest`` | per-partition JSON
-      (``{"<topic>": {"0": 5, ...}}``), resolved once at query start,
-      exactly like the Kafka source;
-    - ``maxOffsetsPerTrigger``: total per-batch cap apportioned across
-      partitions proportionally to their lag (floor + leftover to the
-      lowest partitions), Spark's Kafka rate-limit shape;
-    - restart resumes from the checkpointed per-partition offsets via
-      ``readBetweenOffsets``.
-    """
-
-    def __init__(self, options: dict) -> None:
-        root = options.get("path")
-        topic = options.get("subscribe")
-        if not root or not topic:
-            raise ValueError("kafkasim requires path and subscribe options")
-        self.topic = topic
-        self.dir = _os.path.join(root, topic)
-        self.starting = options.get("startingoffsets", options.get("startingOffsets", "earliest"))
-        cap = options.get("maxoffsetspertrigger", options.get("maxOffsetsPerTrigger"))
-        self.max_per_trigger = int(cap) if cap else None
-
-    # -- partition-log helpers (module-level, shared with the parallel
-    # reader) --------------------------------------------------------------
-
-    def _partitions(self) -> list[int]:
-        return _kafka_partitions(self.dir)
-
-    def _end_offsets(self) -> dict[str, int]:
-        return _kafka_end_offsets(self.dir)
-
-    def _read_slice(self, part: int, lo: int, hi: int):
-        return _kafka_read_slice(self.dir, self.topic, part, lo, hi)
-
-    # -- stream-reader contract -----------------------------------------
-
-    def initialOffset(self) -> dict:
-        return _kafka_initial_offsets(self.dir, self.topic, self.starting)
-
-    def _apportion(self, start: dict, end: dict) -> dict:
-        return _kafka_apportion(start, end, self.max_per_trigger)
-
-    def read(self, start: dict):
-        # never move an offset BACKWARD: a startingOffsets value beyond the
-        # current partition end (or a shrunk log) must not regress the
-        # checkpoint, or rows the user configured to skip would re-emit
-        # once the producer catches up (Kafka treats out-of-range starts
-        # as data loss, never as a rewind)
-        end = self._apportion(start, self._end_offsets())
-        end = {p: max(hi, start.get(p, 0)) for p, hi in end.items()}
-        rows = []
-        for p_str, hi in sorted(end.items(), key=lambda kv: int(kv[0])):
-            lo = start.get(p_str, 0)
-            if hi > lo:
-                rows.extend(self._read_slice(int(p_str), lo, hi))
-        return iter(rows), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        rows = []
-        for p_str, hi in sorted(end.items(), key=lambda kv: int(kv[0])):
-            lo = start.get(p_str, 0)
-            if hi > lo:
-                rows.extend(self._read_slice(int(p_str), lo, hi))
-        return iter(rows)
-
-    def commit(self, end) -> None:
-        pass  # the checkpoint owns offsets (reference K5: no hand-commit)
 
 
 # Upper bound on catch-up slices per Kafka partition (see
@@ -488,18 +384,27 @@ class _KafkaSlice(InputPartition):
 
 
 class KafkaSimParallelStreamReader(DataSourceStreamReader):
-    """Executor-parallel kafkasim reader (``parallel=true`` option).
+    """The kafkasim stream reader: a broker-free source with Kafka's exact
+    contract, so the full ``build_kafka_source`` option surface runs
+    end-to-end without a broker (reference input/kafka_sarama.go consumes
+    the real thing):
 
-    Same topic-directory contract and offset semantics as
-    :class:`KafkaSimStreamReader`, but reads run as one task per Kafka
-    partition ON EXECUTORS (``partitions(start, end)`` → per-partition
-    ``_KafkaSlice``), exactly like the real JVM Kafka source — the driver
-    only lists end offsets.  This removes the simple reader's driver-side
-    decode ceiling (the sustained-load cap documented in COVERAGE.md) and
-    is the DEFAULT since r6; ``parallel=false`` opts back into the simple
-    reader, whose read(start) receives the start offset and therefore
-    caps even a fresh query's first batch (pinned by the drain-loop
-    contract tests).
+    - schema = the 7 columns Spark's Kafka source emits (key/value as
+      BINARY, timestampType 0 = CreateTime);
+    - a "topic" is a directory of ``partition-N.jsonl`` files, offset =
+      line number within the partition file (dense, per-partition
+      monotonic — Kafka's replayability contract);
+    - ``subscribe`` picks the topic subdirectory;
+    - ``startingOffsets``: ``earliest`` | ``latest`` | per-partition JSON
+      (``{"<topic>": {"0": 5, ...}}``), resolved once at query start;
+    - ``maxOffsetsPerTrigger``: total per-batch cap apportioned across
+      partitions proportionally to their lag (floor + leftover to the
+      lowest partitions), Spark's Kafka rate-limit shape;
+    - restart resumes from the checkpointed per-partition offsets.
+
+    Reads run as read tasks ON EXECUTORS (``partitions(start, end)`` →
+    ``_KafkaSlice`` ranges of each Kafka partition), exactly like the real
+    JVM Kafka source — the driver only lists end offsets.
 
     maxOffsetsPerTrigger is apportioned in ``latestOffset`` against the
     last planned end.  The python stream API passes NO start offset to
@@ -609,8 +514,22 @@ class KafkaSimParallelStreamReader(DataSourceStreamReader):
         except (OSError, ValueError):
             return None
 
+    def _initial_offsets(self) -> dict:
+        """Resolve startingOffsets to a per-partition offset dict; ``latest``
+        is the incremental end-offset count (which also records the seek
+        anchor at that boundary)."""
+        if self.starting == "latest":
+            return self._end_offsets()
+        if isinstance(self.starting, str) and self.starting.strip().startswith("{"):
+            per_part = _json.loads(self.starting).get(self.topic, {})
+            return {
+                str(p): int(per_part.get(str(p), 0))
+                for p in _kafka_partitions(self.dir)
+            }
+        return {str(p): 0 for p in _kafka_partitions(self.dir)}
+
     def initialOffset(self) -> dict:
-        off = _kafka_initial_offsets(self.dir, self.topic, self.starting)
+        off = self._initial_offsets()
         # Fresh start (Spark only calls this when there is no checkpoint):
         # baseline rate limiting here so the FIRST latestOffset can apply
         # maxOffsetsPerTrigger.  After a checkpoint restart this is never
@@ -651,7 +570,7 @@ class KafkaSimParallelStreamReader(DataSourceStreamReader):
 
     def latestOffset(self) -> dict:
         if self._progress is None:
-            initial = _kafka_initial_offsets(self.dir, self.topic, self.starting)
+            initial = self._initial_offsets()
             base = self._load_baseline()
             if base is not None:
                 # Sidecar restart path (r6 ADVICE #3): the persisted
@@ -702,7 +621,11 @@ class KafkaSimParallelStreamReader(DataSourceStreamReader):
             return end
         start = self._progress
         end = _kafka_apportion(start, self._end_offsets(), self.max_per_trigger)
-        # never move an offset backward (same contract as the simple reader)
+        # never move an offset BACKWARD: a startingOffsets value beyond the
+        # current partition end (or a shrunk log) must not regress the
+        # checkpoint, or rows the user configured to skip would re-emit
+        # once the producer catches up (Kafka treats out-of-range starts
+        # as data loss, never as a rewind)
         end = {p: max(hi, start.get(p, 0)) for p, hi in end.items()}
         self._progress = end
         self._save_baseline(end)
@@ -803,20 +726,8 @@ class KafkaSimDataSource(DataSource):
     def schema(self):
         return KAFKA_SCHEMA
 
-    def streamReader(self, schema):
-        # The executor-parallel reader is the DEFAULT (r6): it is the real
-        # Kafka source's execution shape — the driver only lists offsets,
-        # decode runs as one task per partition slice on executors.
-        # ``parallel=false`` keeps the driver-side SimpleDataSourceStreamReader,
-        # whose prefetch path the availableNow drain-loop contract tests pin.
-        if str(self.options.get("parallel", "true")).lower() in ("0", "false"):
-            # raise PySparkNotImplementedError so the runner falls back to
-            # simpleStreamReader (pyspark.sql.datasource_internal._streamReader)
-            return super().streamReader(schema)
+    def streamReader(self, schema) -> DataSourceStreamReader:
         return KafkaSimParallelStreamReader(self.options)
-
-    def simpleStreamReader(self, schema) -> SimpleDataSourceStreamReader:
-        return KafkaSimStreamReader(self.options)
 
 
 def register_all(spark) -> None:

@@ -91,9 +91,3 @@ def build_ipv6_ranges(
     from .geolite2 import geolite2_v6_to_dataframe
 
     return geolite2_v6_to_dataframe(spark, os.path.join(home, GEOLITE2_FILE))
-
-
-def build_cdn_map(spark: SparkSession, home: str) -> DataFrame:
-    from .cdn import cdn_map_df
-
-    return cdn_map_df(spark, os.path.join(home, CDN_FILE))

@@ -196,12 +196,6 @@ def geolite2_to_dataframe(spark: SparkSession, mmdb_path: str) -> DataFrame:
     )
 
 
-def geolite2_to_parquet(spark: SparkSession, mmdb_path: str, out_path: str) -> None:
-    geolite2_to_dataframe(spark, mmdb_path).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(out_path)
-
-
 # --------------------------------------------------------------------------
 # Fixture builder (tests): synthesize a structurally-valid mmdb blob.
 # --------------------------------------------------------------------------

@@ -113,12 +113,6 @@ def ipdb_to_dataframe(spark: SparkSession, ipdb_path: str) -> DataFrame:
     )
 
 
-def ipdb_to_parquet(spark: SparkSession, ipdb_path: str, out_path: str) -> None:
-    ipdb_to_dataframe(spark, ipdb_path).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(out_path)
-
-
 # --------------------------------------------------------------------------
 # Fixture builder (tests): synthesize a structurally-valid .ipdb blob.
 # --------------------------------------------------------------------------

@@ -120,12 +120,6 @@ def zxipv6wry_to_dataframe(spark: SparkSession, dat_path: str) -> DataFrame:
     )
 
 
-def zxipv6wry_to_parquet(spark: SparkSession, dat_path: str, out_path: str) -> None:
-    zxipv6wry_to_dataframe(spark, dat_path).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(out_path)
-
-
 # --------------------------------------------------------------------------
 # Fixture builder (tests): synthesize a structurally-valid zxipv6wry blob.
 # --------------------------------------------------------------------------

@@ -1,151 +1,16 @@
-"""Streaming exact-dedup: first-occurrence-wins across micro-batches.
+"""Streaming MinHash-LSH index maintenance (the ``minhash_index_delta``
+twin).
 
-The batch twin is ``operators/dedup.dedup_exact``; this is the streaming
-version a continuously-ingesting corpus needs.  Two tiers:
-
-- ``streaming_dedup_watermark``: ``dropDuplicates`` within a watermark —
-  built-in, state auto-expired, right when duplicates arrive close
-  together (the common case for re-delivered messages).
-- ``StreamingDedupProcessor`` via ``transformWithStateInPandas`` (Spark
-  4.x arbitrary-state API): UNBOUNDED exact dedup keyed on the content
-  hash, with optional state TTL.  State per key is one boolean-sized
-  value; at 100 TB the state store shards by the same hash partitioning
-  as the groupBy, and RocksDB-backed state keeps the working set on disk
-  — this is the architecture of every production streaming deduper.
-
-The reference's only dedup is the Prometheus series first-occurrence-wins
-set (reference ``output/clickhouse.go:110-130``) rebuilt per process; the
-state-store version survives restarts via the checkpoint.
+Every micro-batch shingles and bands only its new documents, probes the
+persisted band store for bucket collisions and appends the verified
+pairs.  The streaming first-arrival exact dedup lives in
+``streaming.analytics.streaming_dedup_exact``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-from ..functions import portable_hash64
-
-DEDUP_OUTPUT_SCHEMA = "content_hash bigint, doc_id bigint, text string"
-
-
-class StreamingDedupProcessor(StatefulProcessor):
-    """Emit only the FIRST row seen per content_hash; drop the rest.
-
-    State: one ``seen`` flag per key.  ``ttl_ms`` bounds state growth when
-    exact-forever semantics aren't required (e.g. re-deliveries only occur
-    within hours) — expired keys simply dedup afresh.
-    """
-
-    def __init__(self, ttl_ms: int | None = None) -> None:
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._seen = handle.getValueState("seen", "seen boolean", self._ttl_ms)
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timer_values
-    ) -> Iterator[pd.DataFrame]:
-        if self._seen.exists():
-            return
-        first = None
-        for pdf in rows:
-            if len(pdf) and first is None:
-                first = pdf.iloc[:1]
-        if first is not None:
-            self._seen.update((True,))
-            yield first
-
-    def close(self) -> None:
-        pass
-
-
-def streaming_dedup_exact(
-    docs_stream: DataFrame, ttl_ms: int | None = None
-) -> DataFrame:
-    """Wire the processor: hash text → groupBy hash → stateful first-wins.
-
-    The shuffle keyed on ``content_hash`` is the same single narrow
-    shuffle as the batch dedup; the state store rides the same partitions.
-    """
-    hashed = docs_stream.select(
-        portable_hash64("text").alias("content_hash"), "doc_id", "text"
-    )
-    return hashed.groupBy("content_hash").transformWithStateInPandas(
-        StreamingDedupProcessor(ttl_ms),
-        DEDUP_OUTPUT_SCHEMA,
-        "append",
-        "none",
-    )
-
-
-def streaming_dedup_exact_gs(docs_stream: DataFrame) -> DataFrame:
-    """Same first-occurrence-wins semantics on the older arbitrary-state
-    API (``applyInPandasWithState``) — runnable in this container, where
-    ``transformWithStateInPandas`` is gated on a missing protobuf
-    dependency.  Identical shuffle/state shape; the newer API adds typed
-    state handles, TTL, and timers, not a different execution model.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("content_hash", LongType()),
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-        ]
-    )
-    state_schema = StructType([StructField("seen", BooleanType())])
-
-    def first_wins(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            return
-        for pdf in pdfs:
-            if len(pdf):
-                state.update((True,))
-                out = pdf.iloc[:1][["doc_id", "text"]].copy()
-                out.insert(0, "content_hash", key[0])
-                yield out
-                return
-
-    hashed = docs_stream.select(
-        portable_hash64("text").alias("content_hash"), "doc_id", "text"
-    )
-    return hashed.groupBy("content_hash").applyInPandasWithState(
-        first_wins, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def streaming_dedup_watermark(
-    docs_stream: DataFrame, ts_col: str = "ts", delay: str = "1 hour"
-) -> DataFrame:
-    """Watermark-bounded streaming dedup on the content hash (built-in)."""
-    return (
-        docs_stream.select(
-            portable_hash64("text").alias("content_hash"), "*"
-        )
-        .withWatermark(ts_col, delay)
-        .dropDuplicates(["content_hash"])
-    )
-
-
-# --------------------------------------------------------------------------
-# Streaming MinHash-LSH index maintenance (the minhash_index_delta twin)
-# --------------------------------------------------------------------------
 
 
 N_KEY_BUCKETS = 64  # band-store partition fanout on the bucket-key hash

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import shard_hash, shard_stripe
+from .store import read_store_or_none
 
 
 class BatchSink(Protocol):
@@ -297,7 +298,11 @@ def prometheus_fanout_sink(
     """
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
+        # None only when the series table does not exist yet (first
+        # epoch); any other read failure raises before this epoch writes
+        # anything, because re-appending every series would break the
+        # written-once contract
+        existing = read_store_or_none(batch_df.sparkSession, series_path)
         batch_df.persist()
         try:
             batch_df.write.mode("append").parquet(metric_path)
@@ -305,13 +310,12 @@ def prometheus_fanout_sink(
                 batch_df.select(series_id_col, *label_cols)
                 .dropDuplicates([series_id_col])
             )
-            try:
-                existing = spark.read.parquet(series_path).select(series_id_col)
+            if existing is not None:
                 new_series = new_series.join(
-                    F.broadcast(existing), series_id_col, "left_anti"
+                    F.broadcast(existing.select(series_id_col)),
+                    series_id_col,
+                    "left_anti",
                 )
-            except Exception:
-                pass  # first epoch: series table does not exist yet
             new_series.write.mode("append").parquet(series_path)
         finally:
             batch_df.unpersist()

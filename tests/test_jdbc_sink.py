@@ -428,7 +428,7 @@ def _stream_into_derby(spark, tmp_path, shards: int, policy: str):
     cfg = TaskConfig(
         name="once_task", topic="flows", table="FLOWS", dims=FLOW_DIMS,
         flush_interval_s=1, buffer_size=512,
-        kafka_options={"path": root, "parallel": "true"},
+        kafka_options={"path": root},
     )
     probe = _BatchProbe(
         JdbcClickHouseSink(

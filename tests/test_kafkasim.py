@@ -75,9 +75,9 @@ def _cfg(**kw) -> TaskConfig:
 
 
 def _drain(spark, cfg, root, ckpt, out_epochs):
-    """Run availableNow rounds until quiescent: with a rate-limited simple
-    stream reader each round consumes one capped batch, so looping both
-    drains the log and exercises the per-trigger cap round by round."""
+    """Run availableNow rounds until quiescent.  Each round is one query
+    run on the shared checkpoint, so looping both drains the log and
+    exercises restart-from-checkpoint round by round."""
     src = build_kafka_source(spark, cfg, "none:9092", fmt="kafkasim")
     typed = transform(src, cfg)
 
@@ -108,37 +108,6 @@ def test_kafkasim_schema_matches_kafka(spark, tmp_path):
         "offset:bigint,timestamp:timestamp,timestampType:int>"
     )
     assert KAFKA_SCHEMA.startswith("key binary, value binary")
-
-
-def test_kafkasim_full_pipeline_virtual_columns_and_rate_limit(spark, tmp_path):
-    # parallel=false: this test pins the SIMPLE reader's prefetch path,
-    # whose read(start) receives the start offset and therefore caps even
-    # the first batch of a fresh query (the parallel default documents the
-    # first batch as admission-uncapped — see its class docstring).
-    root = str(tmp_path / "logs")
-    _write_topic(root, n_per_part=20, parts=2)
-    register_all(spark)
-    cfg = _cfg(kafka_options={"path": root, "parallel": "false"})
-    epochs: list = []
-    _drain(spark, cfg, root, str(tmp_path / "ckpt"), epochs)
-
-    rows = [r for _, batch in epochs for r in batch]
-    assert len(rows) == 40  # earliest -> everything
-    # maxOffsetsPerTrigger (=buffer_size 16) caps every micro-batch
-    assert all(len(batch) <= 16 for _, batch in epochs)
-    assert len(epochs) >= 3  # 40 rows at cap 16 needs >= 3 batches
-    # virtual __kafka* columns filled from message metadata
-    assert all(r["__kafka_topic"] == TOPIC for r in rows)
-    assert {r["__kafka_partition"] for r in rows} == {0, 1}
-    by_part = {}
-    for r in rows:
-        by_part.setdefault(r["__kafka_partition"], []).append(r["__kafka_offset"])
-    # offsets are dense 0..19 per partition, exactly once
-    assert all(sorted(v) == list(range(20)) for v in by_part.values())
-    # typed payload columns parsed from the binary value
-    m = next(r for r in rows if r["__kafka_partition"] == 1 and r["__kafka_offset"] == 3)
-    assert m.name == "p1m3" and m.value == pytest.approx(1001.5)
-    assert str(m.time).startswith("2024-03-01 10:00:03")
 
 
 def test_kafkasim_starting_offsets_latest_and_json(spark, tmp_path):
@@ -260,11 +229,11 @@ def test_kafkasim_restart_resumes_from_checkpoint(spark, tmp_path):
     assert {r.name for r in rows2} == {"late0", "late1"}
 
 
-def test_kafkasim_parallel_reader_matches_simple(spark, tmp_path):
-    """parallel=true swaps in the executor-parallel DataSourceStreamReader
-    (one read task per Kafka partition, decode off the driver).  Contract
-    parity: identical rows, virtual columns, and per-partition dense
-    offsets as the simple reader path; planning emits one slice per
+def test_kafkasim_reader_rows_match_log(spark, tmp_path):
+    """The executor-side reader (one read task per Kafka partition, decode
+    off the driver) against the partition log files it reads: every
+    logged message arrives exactly once with its virtual columns, dense
+    per-partition offsets and typed payload; planning emits one slice per
     partition with the right offset ranges."""
     from clickhouse_sinker_nali_spark.sources.datasources import (
         KafkaSimParallelStreamReader,
@@ -275,20 +244,27 @@ def test_kafkasim_parallel_reader_matches_simple(spark, tmp_path):
     register_all(spark)
     cfg = _cfg(
         buffer_size=64,  # no rate limiting: one batch drains everything
-        kafka_options={"path": root, "parallel": "true"},
+        kafka_options={"path": root},
     )
     epochs: list = []
     _drain(spark, cfg, root, str(tmp_path / "ckpt_par"), epochs)
     rows = [r for _, b in epochs for r in b]
     assert len(rows) == 60
-    by_part = {}
-    for r in rows:
-        assert r["__kafka_topic"] == TOPIC
-        by_part.setdefault(r["__kafka_partition"], []).append(r["__kafka_offset"])
-    assert set(by_part) == {0, 1, 2}
-    assert all(sorted(v) == list(range(20)) for v in by_part.values())
-    m = next(r for r in rows if r["__kafka_partition"] == 2 and r["__kafka_offset"] == 5)
-    assert m.name == "p2m5" and m.value == 2002.5
+    assert all(r["__kafka_topic"] == TOPIC for r in rows)
+    # 60 rows, 60 distinct (partition, offset) keys: each logged message
+    # exactly once, offsets dense per partition, and the typed payload
+    # parsed from the binary value matches the log line it came from
+    # (partition p, line off holds message p{p}m{off})
+    assert {(r["__kafka_partition"], r["__kafka_offset"], r.name, r.value)
+            for r in rows} == {
+        (p, off, f"p{p}m{off}", p * 1000 + off * 0.5)
+        for p in range(3) for off in range(20)
+    }
+    m = next(
+        r for r in rows if (r["__kafka_partition"], r["__kafka_offset"]) == (1, 3)
+    )
+    assert m.name == "p1m3" and m.value == pytest.approx(1001.5)
+    assert str(m.time).startswith("2024-03-01 10:00:03")
 
     # planning shape: one slice per partition, [start, end) ranges
     reader = KafkaSimParallelStreamReader(
@@ -304,22 +280,20 @@ def test_kafkasim_parallel_reader_matches_simple(spark, tmp_path):
     }
 
 
-@pytest.mark.parametrize("parallel", ["true", "false"])
-def test_kafkasim_partition_growth_mid_stream(spark, tmp_path, parallel):
+def test_kafkasim_partition_growth_mid_stream(spark, tmp_path):
     """Kafka topics can GROW partitions; the reference daemon absorbs the
     consumer-group rebalance and starts reading the new partition from its
     beginning (input/kafka_sarama.go rebalance path).  The kafkasim
-    readers' equivalent (BOTH execution shapes): a partition-N.jsonl
-    appearing mid-stream enters the end-offset listing on the next
-    trigger, planning defaults its start to 0 (absent from the
-    checkpointed offset map), and its rows arrive exactly once alongside
-    the existing partitions'."""
+    reader's equivalent: a partition-N.jsonl appearing mid-stream enters
+    the end-offset listing on the next trigger, planning defaults its
+    start to 0 (absent from the checkpointed offset map), and its rows
+    arrive exactly once alongside the existing partitions'."""
     root = str(tmp_path / "logs")
     _write_topic(root, n_per_part=10, parts=2)
     register_all(spark)
     cfg = _cfg(
         buffer_size=1 << 10,
-        kafka_options={"path": root, "parallel": parallel},
+        kafka_options={"path": root},
     )
     ckpt = str(tmp_path / "ckpt_growth")
     epochs: list = []
@@ -521,7 +495,7 @@ def test_kafkasim_parallel_sidecar_caps_first_restart_batch(tmp_path):
 
 
 def test_kafkasim_parallel_rate_limit_and_resume(spark, tmp_path):
-    """The parallel reader under maxOffsetsPerTrigger: the log drains
+    """The kafkasim reader under maxOffsetsPerTrigger: the log drains
     completely, a checkpoint restart resumes without loss or dups, and —
     because Spark's python stream protocol gives latestOffset no start
     offset — only the FIRST batch of a (re)started query is admission-
@@ -531,7 +505,7 @@ def test_kafkasim_parallel_rate_limit_and_resume(spark, tmp_path):
     root = str(tmp_path / "logs")
     _write_topic(root, n_per_part=20, parts=2)
     register_all(spark)
-    cfg = _cfg(kafka_options={"path": root, "parallel": "true"})  # cap 16
+    cfg = _cfg(kafka_options={"path": root})  # cap 16
     epochs: list = []
     ckpt = str(tmp_path / "ckpt_par_rl")
     _drain(spark, cfg, root, ckpt, epochs)

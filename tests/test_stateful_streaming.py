@@ -12,7 +12,6 @@ import json
 import os
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -160,88 +159,6 @@ def test_apply_in_pandas_with_state_running_counts(spark, tmp_path):
         latest[r.uid] = r.total  # memory sink appends updates in order
     assert set(latest) == {0, 1, 2, 3, 4}
     assert all(v == 120 for v in latest.values())
-
-
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs protobuf (absent in container)",
-)
-def test_transform_with_state_streaming_dedup(spark, tmp_path):
-    """Unbounded exact streaming dedup via transformWithStateInPandas:
-    duplicates planted across MULTIPLE micro-batches must still collapse
-    (state survives batch boundaries), unlike a per-batch distinct."""
-    from clickhouse_sinker_nali_spark.streaming.dedup import streaming_dedup_exact
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    # two files → availableNow processes them as separate batches; texts
-    # repeat across files so cross-batch state is what dedups them
-    for fname, base in [("a.txt", 0), ("b.txt", 50)]:
-        with open(os.path.join(src, fname), "w") as f:
-            for i in range(100):
-                f.write(json.dumps({"doc_id": base + i, "text": f"doc number {i % 20}"}) + "\n")
-    raw = spark.readStream.format("text").option("maxFilesPerTrigger", 1).load(src)
-    docs = raw.select(
-        F.from_json("value", "doc_id bigint, text string").alias("m")
-    ).select("m.doc_id", "m.text")
-    q = (
-        streaming_dedup_exact(docs)
-        .writeStream.format("memory")
-        .queryName("twsp_dedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.table("twsp_dedup").collect()
-    # 200 rows, 20 distinct texts → exactly 20 survivors, one per hash
-    assert len(rows) == 20
-    assert len({r.content_hash for r in rows}) == 20
-    texts = {r.text for r in rows}
-    assert texts == {f"doc number {i}" for i in range(20)}
-
-
-def test_groupstate_streaming_dedup_across_batches(spark, tmp_path):
-    """First-occurrence-wins dedup with explicit state must collapse
-    duplicates that arrive in DIFFERENT micro-batches."""
-    from clickhouse_sinker_nali_spark.streaming.dedup import (
-        streaming_dedup_exact_gs,
-    )
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    for fname, base in [("a.txt", 0), ("b.txt", 50)]:
-        with open(os.path.join(src, fname), "w") as f:
-            for i in range(100):
-                f.write(json.dumps({"doc_id": base + i, "text": f"doc number {i % 20}"}) + "\n")
-    raw = spark.readStream.format("text").option("maxFilesPerTrigger", 1).load(src)
-    docs = raw.select(
-        F.from_json("value", "doc_id bigint, text string").alias("m")
-    ).select("m.doc_id", "m.text")
-    q = (
-        streaming_dedup_exact_gs(docs)
-        .writeStream.format("memory")
-        .queryName("gs_dedup")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.table("gs_dedup").collect()
-    assert len(rows) == 20  # 200 rows, 20 distinct texts, state spans batches
-    assert len({r.content_hash for r in rows}) == 20
-    assert {r.text for r in rows} == {f"doc number {i}" for i in range(20)}
 
 
 def test_stream_stream_interval_join(spark, tmp_path):

@@ -466,6 +466,30 @@ def test_prometheus_fanout_streaming_two_tables(spark, tmp_path):
     )
 
 
+def test_prometheus_fanout_unreadable_series_store_raises(spark, tmp_path):
+    """A series table that exists but cannot be read is not "first epoch":
+    the sink must raise before appending anything, instead of re-appending
+    every series and breaking the written-once contract."""
+    from clickhouse_sinker_nali_spark.streaming.sinks import (
+        prometheus_fanout_sink,
+    )
+
+    metric_path = str(tmp_path / "metrics")
+    series_path = str(tmp_path / "series")
+    os.makedirs(series_path)
+    with open(os.path.join(series_path, "part-00000.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    batch = spark.createDataFrame(
+        [(1, "k1", 1.0), (2, "k2", 2.0)], "series_id bigint, kind string, value double"
+    )
+    sink = prometheus_fanout_sink(metric_path, series_path, ["kind"])
+    with pytest.raises(Exception) as err:
+        sink(batch, 0)
+    assert "parquet" in str(err.value).lower()
+    assert os.listdir(series_path) == ["part-00000.parquet"]  # nothing appended
+    assert not os.path.exists(metric_path)
+
+
 def test_write_rows_skipping_bad_reference_semantics():
     """PR5: one bad row rolls back the whole tx, then the good rows are
     re-written in a fresh tx (reference output/clickhouse_util.go:32-93)."""

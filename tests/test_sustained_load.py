@@ -20,12 +20,11 @@ properties that define "sustained":
 4. exactly-once: every produced (partition, offset) lands in the sink
    exactly once, including across the final drain.
 
-The source runs with ``parallel=true`` — the executor-parallel kafkasim
-reader (one read task per Kafka partition, decode OFF the driver, the
-real Kafka source's execution shape).  Peak engine throughput is still
-the bench's JVM-side parse figure (~1 M rows/s parse, ~560 K rows/s
-parse→sink); this test is about holding a steady offered rate
-indefinitely, not peak.
+The source is the kafkasim reader (one read task per Kafka partition,
+decode OFF the driver, the real Kafka source's execution shape).  Peak
+engine throughput is still the bench's JVM-side parse figure (~1 M
+rows/s parse, ~560 K rows/s parse→sink); this test is about holding a
+steady offered rate indefinitely, not peak.
 """
 
 from __future__ import annotations
@@ -136,7 +135,7 @@ def test_sustained_streaming_ingest_steady_state(spark, tmp_path):
         dims=DIMS,
         buffer_size=1 << 19,  # cap far above rate×trigger: no rate limiting
         flush_interval_s=TRIGGER_S,
-        kafka_options={"path": root, "parallel": "true"},
+        kafka_options={"path": root},
     )
     out = str(tmp_path / "sink")
     sink = ParquetSink(path=out, shards=4)
@@ -260,7 +259,7 @@ def test_concurrent_multi_task_isolation_under_load(spark, tmp_path):
                 dims=DIMS + [{"name": "__kafka_topic", "type": "String"}],
                 buffer_size=1 << 19,
                 flush_interval_s=TRIGGER_S,
-                kafka_options={"path": root, "parallel": "true"},
+                kafka_options={"path": root},
             )
             task["out"] = str(tmp_path / f"sink_{t}")
             sink = ParquetSink(path=task["out"], shards=2)
