@@ -161,6 +161,50 @@ def test_apply_in_pandas_with_state_running_counts(spark, tmp_path):
     assert all(v == 120 for v in latest.values())
 
 
+def test_groupstate_streaming_dedup_across_batches(spark, tmp_path):
+    """First-occurrence-wins dedup with explicit state must collapse
+    duplicates that arrive in DIFFERENT micro-batches."""
+    from clickhouse_sinker_nali_spark.streaming.analytics import (
+        streaming_dedup_exact,
+    )
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    for n, (fname, base) in enumerate([("a.txt", 0), ("b.txt", 50)]):
+        path = os.path.join(src, fname)
+        with open(path, "w") as f:
+            for i in range(100):
+                f.write(json.dumps({"doc_id": base + i, "text": f"doc number {i % 20}"}) + "\n")
+        # file-source batch order follows modification time: a.txt first
+        t = 1_700_000_000 + n * 1000
+        os.utime(path, (t, t))
+    raw = spark.readStream.format("text").option("maxFilesPerTrigger", 1).load(src)
+    docs = raw.select(
+        F.from_json("value", "doc_id bigint, text string").alias("m")
+    ).select("m.doc_id", "m.text")
+    q = (
+        streaming_dedup_exact(docs)
+        .writeStream.format("memory")
+        .queryName("gs_dedup")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    q.awaitTermination(180)
+    rows = spark.table("gs_dedup").collect()
+    assert len(rows) == 20  # 200 rows, 20 distinct texts, state spans batches
+    assert len({r.text_hash for r in rows}) == 20
+    # each survivor is the first batch's smallest doc_id for its text; the
+    # second batch repeats every text and emits nothing
+    assert {r.doc_id for r in rows} == set(range(20))
+    assert all(r.n_batch_copies == 5 for r in rows)
+    texts = spark.createDataFrame(
+        [(f"doc number {i}",) for i in range(20)], "text string"
+    ).select(F.sha2("text", 256).alias("h"))
+    assert {r.text_hash for r in rows} == {r.h for r in texts.collect()}
+
+
 def test_stream_stream_interval_join(spark, tmp_path):
     """Stream-stream inner join with watermarks + an event-time interval
     condition (click within 10 min after its impression) — the canonical

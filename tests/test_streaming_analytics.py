@@ -372,32 +372,6 @@ def test_streaming_dedup_exact_first_arrival_wins(spark, tmp_path):
     )
     assert {r.text_hash for r in got.values()} == {r.h for r in batch.collect()}
 
-    # two files (two micro-batches) of 100 rows over the same 20 texts:
-    # 200 rows, 20 survivors, each the first batch's smallest doc_id; the
-    # second batch repeats every text and emits nothing
-    src2 = str(tmp_path / "src2")
-    os.makedirs(src2)
-    for fname, base in (("a.txt", 0), ("b.txt", 50)):
-        with open(os.path.join(src2, fname), "w") as f:
-            for i in range(100):
-                f.write(json.dumps(
-                    {"doc_id": base + i, "text": f"doc number {i % 20}"}
-                ) + "\n")
-    _run(
-        streaming_dedup_exact(_stream_json(spark, src2, schema)),
-        tmp_path,
-        "dedup_stream_two_files",
-        "append",
-    )
-    rows = spark.table("dedup_stream_two_files").collect()
-    assert len(rows) == 20
-    assert {r.doc_id for r in rows} == set(range(20))
-    assert all(r.n_batch_copies == 5 for r in rows)
-    texts = spark.createDataFrame(
-        [(f"doc number {i}",) for i in range(20)], "text string"
-    ).select(F.sha2("text", 256).alias("h"))
-    assert {r.text_hash for r in rows} == {r.h for r in texts.collect()}
-
 
 def test_streaming_watermark_drops_late_rows_and_counts_them(spark, tmp_path):
     """A second-batch event older than (max event time - delay) must be
